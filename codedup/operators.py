@@ -277,14 +277,8 @@ def _sweep_block_pairs(blocks: DataFrame, threshold: float, n_blocks: int,
     HOT_MACS = 1 << 17
 
     def gen(it):
-        import os as _os
-        import sys as _sys
-        import time as _time
-
-        dbg = _os.environ.get("CODEDUP_SWEEP_DEBUG")
         for pdf in it:
             for row in pdf.itertuples(index=False):
-                _t0 = _time.time()
                 xdocs = np.frombuffer(row.xdocs, dtype=np.int64)
                 xoff = np.frombuffer(row.xoff, dtype=np.int64)
                 vx = np.frombuffer(row.xv, dtype=np.int64)
@@ -462,9 +456,6 @@ def _sweep_block_pairs(blocks: DataFrame, threshold: float, n_blocks: int,
                         "na": np.concatenate(out_na),
                         "nb": np.concatenate(out_nb),
                     }).astype("int64")
-                if dbg:
-                    print(f"SWEEP pair ({row.xblk},{row.yblk}) "
-                          f"{_time.time() - _t0:.2f}s", file=_sys.stderr)
 
     schema = T.StructType([T.StructField(c, T.LongType()) for c in ("a", "b", "c", "na", "nb")])
     return pairs.mapInPandas(gen, schema=schema)

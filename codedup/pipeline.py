@@ -7,6 +7,11 @@ checkpoint table.  ``run`` with resume=True skips every stage whose
 manifest is already committed under the current config fingerprint —
 the north_rule's "resumes from the last completed stage without
 recomputation" (tested in tests/test_resume.py).
+
+The MinHash chain (reps -> signatures -> bands -> candidates ->
+verified) is ``minhash_chain``, shared with the query catalog, which
+runs it under the in-session ``local_checkpoint`` policy instead of
+checkpoint storage.
 """
 
 from __future__ import annotations
@@ -14,6 +19,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -57,6 +63,53 @@ class PipelineResult:
     recomputed_stages: list[str] = field(default_factory=list)
 
 
+class MinHashChain(NamedTuple):
+    reps: DataFrame          # one representative per distinct content
+    sigs: DataFrame          # signatures, FAULT sentinels included
+    cands: DataFrame         # LSH candidate pairs
+    verified: DataFrame      # verified pairs (kind='fault' rows included)
+
+
+def local_checkpoint(name: str, build) -> DataFrame:
+    """In-session stage policy: materialize every stage once (eager
+    ``localCheckpoint``), so multi-consumer stages (reps and signatures
+    feed banding AND both verify joins) never re-run their Arrow
+    kernels.  Nothing outlives the session."""
+    return build().localCheckpoint(eager=True)
+
+
+def sign_and_band(reps: DataFrame, cfg: DedupConfig, stage, sign):
+    """reps(file_id, content) -> (signatures, band rows) through
+    ``stage``.  FAULT sentinel rows (n_shingles = -1, see signatures.py)
+    stay visible in the signatures but never reach banding: every one of
+    them carries an empty minhash, so they would share a bucket in every
+    band and pair with each other."""
+    sigs = stage("signatures", lambda: sign(reps))
+    bands = stage("bands", lambda: band_rows(sigs.filter(F.col("n_shingles") >= 0), cfg))
+    return sigs, bands
+
+
+def minhash_chain(fp: DataFrame, cfg: DedupConfig, stage, sign) -> MinHashChain:
+    """fingerprints -> reps -> signatures -> bands -> candidates ->
+    verified, each stage built through ``stage(name, build)`` (the
+    checkpoint policy: storage-backed with resume in ``run``,
+    ``local_checkpoint`` in the query catalog).  ``sign`` maps
+    reps(file_id, content) to the signatures table."""
+    reps = stage("reps", lambda: representatives(fp))
+    # explicit spread before the CPU-bound signature kernel: a small
+    # reps table arrives in a handful of partitions (one parquet file
+    # read back, or AQE-coalesced exchanges: measured 10 at sf1.0), which
+    # would leave most cores idle for this Arrow stage (same rationale
+    # as the verify-stage repartition).  Measured on 4 cores, cold
+    # pipeline.run over 3.5k files: signatures stage 5.0 s -> 2.4 s
+    par = fp.sparkSession.sparkContext.defaultParallelism
+    sigs, bands = sign_and_band(
+        reps.select("file_id", "content").repartition(par), cfg, stage, sign)
+    cands = stage("candidates", lambda: candidate_pairs(bands, cfg))
+    verified = stage("verified", lambda: verify_pairs(cands, reps, sigs, cfg))
+    return MinHashChain(reps, sigs, cands, verified)
+
+
 def run(
     spark: SparkSession,
     source_paths: list[str],
@@ -65,7 +118,6 @@ def run(
     run_id: str = "run",
     resume: bool = True,
     langs: list[str] | None = None,
-    use_signature_cache: bool = True,
     storage=None,
     source_format: str = "parquet",
 ) -> PipelineResult:
@@ -114,17 +166,11 @@ def run(
         F.lit("64-bit file_id collision").alias("message"),
     ))
     eedges = stage("exact_edges", lambda: exact_edges(fp))
-    # materialized: consumed 3x downstream (signatures + both verify
-    # content joins) — deriving it each time would re-shuffle the full
-    # content column through the dedup window every consumer
-    reps = stage("reps", lambda: representatives(fp))
+    cache = (SignatureCache(store.root, cfg.fingerprint())
+             if store is not None and hasattr(store, "root") else None)
 
-    def build_signatures() -> DataFrame:
-        cache = (SignatureCache(store.root, cfg.fingerprint())
-                 if (store is not None and use_signature_cache and hasattr(store, "root"))
-                 else None)
+    def build_signatures(rep_ids: DataFrame) -> DataFrame:
         cached = cache.read(spark) if cache else None
-        rep_ids = reps.select("file_id", "content")
         if cached is None:
             sigs = compute_signatures(rep_ids, cfg)
             if cache:
@@ -134,18 +180,11 @@ def run(
             return sigs
         missing = rep_ids.join(cached.select("file_id"), "file_id", "left_anti")
         new_sigs = compute_signatures(missing, cfg).localCheckpoint(eager=True)
-        if cache:
-            cache.append(new_sigs)
+        cache.append(new_sigs)
         reused = cached.join(rep_ids.select("file_id"), "file_id", "left_semi")
         return reused.unionByName(new_sigs)
 
-    sigs = stage("signatures", build_signatures)
-    # FAULT sentinel rows (n_shingles = -1, see signatures.py) stay
-    # visible in the checkpoint but never reach banding/verification
-    good_sigs = sigs.filter(F.col("n_shingles") >= 0)
-    bands = stage("bands", lambda: band_rows(good_sigs, cfg))
-    cands = stage("candidates", lambda: candidate_pairs(bands, cfg))
-    verified = stage("verified", lambda: verify_pairs(cands, reps, sigs, cfg))
+    verified = minhash_chain(fp, cfg, stage, build_signatures).verified
 
     def build_clusters() -> DataFrame:
         near_edges = (

@@ -76,3 +76,43 @@ def test_verify_fault_recorded_not_fatal(spark, monkeypatch):
     ok = out[out.kind != "fault"]
     assert len(faults) == 1 and set(faults[["a", "b"]].iloc[0]) == {1, 2}
     assert len(ok) == 1 and set(ok[["a", "b"]].iloc[0]) == {3, 4}
+
+
+def test_fault_sentinels_never_band_in_stream_or_batch(spark, tmp_path, monkeypatch):
+    """Every FAULT sentinel carries an empty minhash, so if sentinels
+    reached banding, two faulted files would share a bucket in every
+    band and surface as a kind='fault' pair.  The stream and the batch
+    pipeline both drop sentinels before banding: no fault pair either
+    way.  The MinHash prefilter is off: two empty signatures agree on 0
+    slots, so the default prefilter would drop the pair before verify
+    and hide where it came from."""
+    from codedup import pipeline
+    from codedup.streaming import IncrementalDedup
+
+    body = "def f():\n    return 1\n" * 30
+    files = pd.DataFrame(
+        [
+            ("org/a", "p1.py", "a" * 40, "python", "POISON_MARKER one " * 20),
+            ("org/a", "p2.py", "b" * 40, "python", "POISON_MARKER two " * 20),
+            ("org/a", "x.py", "c" * 40, "python", body),
+            ("org/b", "x_copy.py", "d" * 40, "python", body + "# v2\n"),
+        ],
+        columns=["repo", "path", "commit", "lang", "content"],
+    )
+    src = str(tmp_path / "files.parquet")
+    files.to_parquet(src, index=False)
+
+    monkeypatch.setenv("CODEDUP_FAULT_INJECT", "POISON_MARKER")
+    cfg = DedupConfig(shuffle_partitions=4, minhash_prefilter_margin=None)
+    inc = IncrementalDedup(spark, str(tmp_path / "stream"), cfg)
+    inc.process_batch(spark.read.parquet(src), 0)
+    assert (inc.signatures().toPandas().n_shingles < 0).sum() == 2
+    stream_pairs = inc.pairs().toPandas()
+    assert not (stream_pairs.kind == "fault").any()
+    assert len(stream_pairs) == 1          # the healthy near-dup pair
+
+    res = pipeline.run(spark, [src], cfg, work_dir=str(tmp_path / "w"),
+                       run_id="f", resume=False)
+    verified = res.verified.toPandas()
+    assert not (verified.kind == "fault").any()
+    assert len(verified) == 1
